@@ -9426,15 +9426,19 @@ object Queries {
     * string is lexicographically smaller — settled by the +length term
     * (length ≤ 17 < 32, so it never carries into the padded field).
     * Range: padded < 10¹⁷, so code < 10¹⁷·32 + 17 < 2⁶² — no overflow,
-    * and keys are non-negative with ≤ 17 digits (enforced upstream by
-    * the bigint key domain; LabelEncodeSpec property-checks the
-    * isomorphism). Bijectivity ⇒ identical vote counts; order
+    * and keys are non-negative with ≤ 17 digits. A longer key would be
+    * truncated by the rpad and silently merge with another, so it fails
+    * the query instead (LabelEncodeSpec property-checks the isomorphism
+    * and the refusal). Bijectivity ⇒ identical vote counts; order
     * isomorphism ⇒ identical tie-breaks ⇒ identical labels, decoded
     * only on the final output. */
   private[graft] val LpPBit = 1L << 62
   private[graft] def lpEncode(key: Column, isPart: Boolean): Column = {
     val str = key.cast("string")
-    val code = rpad(str, 17, "0").cast("long") * 32 + length(str)
+    val padded = when(length(str) > 17, raise_error(
+        concat(lit("lpEncode: key longer than 17 digits: "), str)))
+      .otherwise(rpad(str, 17, "0").cast("long"))
+    val code = padded * 32 + length(str)
     if (isPart) code + lit(LpPBit) else code
   }
   private[graft] def lpDecode(code: Column): Column = {

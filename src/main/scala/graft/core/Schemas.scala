@@ -22,16 +22,7 @@ case class FileRow(datasetCode: String, relpath: String, sizeBytes: Long,
   * string builds scattered through every reference script, as column
   * expressions. */
 object Identifiers {
-  /** `/SPACE/PROJECT/PROJECTE<n>` experiment ids
-    * (register-fastq-dropbox.py:104-110). */
-  def experimentId(space: Column, project: Column, n: Column): Column =
-    format_string("/%s/%s/%sE%d", space, project, project, n)
-
   /** `/SPACE/CODE` sample identifiers. */
   def sampleId(space: Column, code: Column): Column =
     format_string("/%s/%s", space, code)
-
-  /** `MS<n><barcode>`-style derived run codes (etl_msconvert.py:420-426). */
-  def runCode(prefix: String, n: Column, barcode: Column): Column =
-    concat(lit(prefix), n.cast("string"), barcode)
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.core.Checkpoints
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -19,10 +19,6 @@ import org.apache.spark.storage.StorageLevel
 object Dedup {
   /** Mersenne prime 2^31-1 for the MinHash permutation family. */
   val P: Long = 2147483647L
-
-  /** JVM-unique suffix for convergence-observation names (a Spark
-    * Observation name can't be reused while registered). */
-  private val ccObsId = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Deterministic (a, b) parameters for k hash permutations
     * h_j(x) = (a_j * x + b_j) mod P. `a` stays below 2^30 so a*x fits a
@@ -174,15 +170,10 @@ object Dedup {
     sh.join(broadcast(hot), Seq("h"), "left_anti")
   }
 
-  /** MinHash signature: k min-hash columns m0..m{k-1} per doc. One
-    * explode + one groupBy — the k permutations are k expressions over the
-    * same exploded rows, not k passes. */
-  def minhashSignature(docs: DataFrame, idCol: String, textCol: String,
-                       k: Int = 16, n: Int = 3): DataFrame =
-    minhashFromShingles(shingleHashes(docs, idCol, textCol, n), k)
-
-  /** Same, over a precomputed (id, h) shingle-hash frame — lets a pipeline
-    * build shingles once and reuse them for signatures AND verification. */
+  /** MinHash signature over a precomputed (id, h) shingle-hash frame: k
+    * min-hash columns m0..m{k-1} per doc. One groupBy — the k permutations
+    * are k expressions over the same rows, not k passes — and a pipeline
+    * builds shingles once and reuses them for signatures AND verification. */
   def minhashFromShingles(sh: DataFrame, k: Int): DataFrame = {
     val mins = hashParams(k).zipWithIndex.map { case ((a, b), j) =>
       min((col("h") * a + b) % P).as(s"m$j")
@@ -420,10 +411,10 @@ object Dedup {
     *   - `edges` is hash-partitioned on the probe key `u` and pinned, so
     *     every hop's join reuses the same layout instead of reshuffling
     *     the edge table per iteration;
-    *   - convergence is detected with an [[org.apache.spark.sql.Observation]]
-    *     riding the hop's own materialization action (count of labels
-    *     that changed) — no second per-iteration job, and no assumption
-    *     that ids are numeric (works for string doc ids / URLs too).
+    *   - convergence (count of labels that changed) is observed on the
+    *     hop's own pin ([[Checkpoints.pinObserved]]) — no second
+    *     per-iteration job, and no assumption that ids are numeric
+    *     (works for string doc ids / URLs too).
     * Returns (id, component). */
   def connectedComponents(pairs: DataFrame): DataFrame = {
     val p = Checkpoints.pin(
@@ -433,58 +424,26 @@ object Dedup {
       p.union(p.select(col("v").as("u"), col("u").as("v")))
         .distinct()
         .repartition(shufflePartitions, col("u")))
-    var labels = Checkpoints.pin(edges.select(col("u").as("id")).distinct()
-      .select(col("id"), col("id").as("component")))
-    var converged = false
-    var iter = 0
-    val maxIters = 1000 // one hop per iteration; loud failure, never silent
-    while (!converged && iter < maxIters) {
-      // New label = min(own label, labels arriving over edges). The own
-      // row is tagged so the hop also knows the OLD label — `__changed`
-      // falls out of the same aggregate, type-agnostically.
-      val contrib = labels.join(edges, col("id") === col("u"))
-        .select(col("v").as("id"), col("component"), lit(false).as("__self"))
-      val hop = contrib
-        .union(labels.select(col("id"), col("component"), lit(true).as("__self")))
-        .groupBy("id")
-        .agg(min(col("component")).as("component"),
-          min(when(col("__self"), col("component"))).as("__old"))
-      val obs = org.apache.spark.sql.Observation(
-        s"graft_cc_${ccObsId.incrementAndGet()}")
-      val cp = Checkpoints.pin(hop
-        .observe(obs, sum(when(col("component") =!= col("__old"), 1L)
-          .otherwise(0L)).as("n_changed"))) // the only action this iteration; obs rides it
-      // Observation metrics riding the pin's action is behavior of the
-      // current Spark (both checkpoint flavors run through withAction →
-      // the listener path). Bound the blocking get with a generous deadline,
-      // so if a future version stops routing checkpoint through the
-      // listener this fails loudly instead of hanging forever.
-      val metrics =
-        try {
-          scala.concurrent.Await.result(
-            scala.concurrent.Future(obs.get)(
-              scala.concurrent.ExecutionContext.global),
-            scala.concurrent.duration.Duration(300, "s"))
-        } catch {
-          case _: java.util.concurrent.TimeoutException =>
-            throw new IllegalStateException(
-              "connectedComponents: convergence metrics never arrived — the " +
-                "Observation no longer rides the checkpoint action on this " +
-                "Spark version; switch the convergence probe to an explicit count")
-        }
-      val nChanged = metrics.get("n_changed") match {
-        case Some(l: java.lang.Long) => l.longValue()
-        case _ => 0L // empty graph: sum over zero rows is NULL
-      }
-      labels = cp.select("id", "component")
-      converged = nChanged == 0L
-      iter += 1
+    // one hop per round; loud failure at the cap, never silent
+    Checkpoints.converge(Checkpoints.pin(edges.select(col("u").as("id"))
+        .distinct().select(col("id"), col("id").as("component"))), 1000,
+      "connectedComponents did not converge within 1000 label-propagation " +
+        "hops — component diameter exceeds the cap; raise it or pre-contract the graph") {
+      labels =>
+        // New label = min(own label, labels arriving over edges). The own
+        // row is tagged so the hop also knows the OLD label — the changed
+        // count falls out of the same aggregate, type-agnostically.
+        val contrib = labels.join(edges, col("id") === col("u"))
+          .select(col("v").as("id"), col("component"), lit(false).as("__self"))
+        val hop = contrib
+          .union(labels.select(col("id"), col("component"), lit(true).as("__self")))
+          .groupBy("id")
+          .agg(min(col("component")).as("component"),
+            min(when(col("__self"), col("component"))).as("__old"))
+        val (cp, m) = Checkpoints.pinObserved(hop,
+          count(when(col("component") =!= col("__old"), 1)).as("n_changed"))
+        (cp.select("id", "component"), m.getLong(0) == 0L)
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxIters label-propagation " +
-          "hops — component diameter exceeds the cap; raise it or pre-contract the graph")
-    labels
   }
 
   /** Alternating large-star/small-star connected components (Kiveris,
@@ -551,46 +510,27 @@ object Dedup {
     val nodes = Checkpoints.pin(
       pairs.select(col("id_a").as("id"))
         .union(pairs.select(col("id_b").as("id"))).distinct())
-    // The round signature (count + two independent hash folds) rides the
-    // pin's OWN materialization action via an Observation, the same
-    // no-second-job pattern as [[connectedComponents]]'s convergence
-    // probe: one pass over the edge set per round, not two. r18: the
-    // folds are bit_xor over xxhash64 — order-independent like the old
-    // decimal(38) sums (the edge set is DISTINCT, so multiset == set and
-    // XOR is a sound set signature), but pure 64-bit codegen arithmetic
-    // instead of 128-bit decimal per row. The signature still only
-    // decides WHEN to pay for the exact exceptAll check, so a collision
-    // costs an extra round, never a wrong answer — semantics unchanged.
-    def pinWithSignature(e: DataFrame): (DataFrame, (Long, Long, Long)) = {
-      val obs = org.apache.spark.sql.Observation(
-        s"graft_ccstar_${ccObsId.incrementAndGet()}")
-      val cp = Checkpoints.pin(e.observe(obs,
-        count(lit(1)).as("n"),
+    // The round signature (count + two independent hash folds) is
+    // observed on the pin's OWN action ([[Checkpoints.pinObserved]]): one
+    // pass over the edge set per round, not two. r18: the folds are
+    // bit_xor over xxhash64 — order-independent (the edge set is
+    // DISTINCT, so multiset == set and XOR is a sound set signature) and
+    // pure 64-bit codegen arithmetic. Signatures compare as Rows, so the
+    // null folds of an empty edge set need no special case. The signature
+    // only decides WHEN to pay for the exact exceptAll check, so a
+    // collision costs an extra round, never a wrong answer.
+    def pinWithSignature(e: DataFrame): (DataFrame, Row) =
+      Checkpoints.pinObserved(e, count(lit(1)).as("n"),
         expr("bit_xor(xxhash64(u, v))").as("h1"),
-        expr("bit_xor(xxhash64(31, v, u))").as("h2")))
-      val m = obs.get
-      def lng(k: String): Long = m.get(k) match {
-        case Some(l: java.lang.Long) => l.longValue()
-        case _ => 0L // empty edge set: fold over zero rows is NULL
-      }
-      (cp, (lng("n"), lng("h1"), lng("h2")))
+        expr("bit_xor(xxhash64(31, v, u))").as("h2"))
+    // ~log² rounds on any real graph; loud, never silent
+    val (edges, _) = Checkpoints.converge(pinWithSignature(dedup(
+        pairs.select(col("id_a").as("u"), col("id_b").as("v")))), 60,
+      "connectedComponentsStar did not converge in 60 alternating " +
+        "rounds — pathological input; raise the cap") { case (e, sig) =>
+      val (next, nsig) = pinWithSignature(smallStar(largeStar(e)))
+      ((next, nsig), nsig == sig && next.exceptAll(e).isEmpty)
     }
-    var (edges, sig) = pinWithSignature(dedup(
-      pairs.select(col("id_a").as("u"), col("id_b").as("v"))))
-    var converged = false
-    var iter = 0
-    val maxIters = 60 // ~log² rounds on any real graph; loud, never silent
-    while (!converged && iter < maxIters) {
-      val (next, nsig) = pinWithSignature(smallStar(largeStar(edges)))
-      if (nsig == sig && next.exceptAll(edges).isEmpty) converged = true
-      edges = next
-      sig = nsig
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxIters alternating " +
-          "rounds — pathological input; raise the cap")
     // fixed point = star forest: every non-root points at its component
     // min; roots and isolated nodes label themselves
     nodes.join(edges, nodes("id") === edges("u"), "left")

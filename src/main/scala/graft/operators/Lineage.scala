@@ -12,7 +12,7 @@ import org.apache.spark.storage.StorageLevel
   * :669-724) and to the roots (get-experimental-design-tsv/script.py:16-34).
   * Here the DAG is an edge table `(child, parent)` and every walk is an
   * iterated self-join to fixpoint — the standard Spark shape for recursive
-  * CTEs. Each frontier is cached and the loop stops when the frontier is
+  * CTEs. Each frontier is pinned and the loop stops when the frontier is
   * empty. A graph still live at `MaxDepth` — a cycle, or a catalog far
   * deeper than any the reference produces (4-5 levels) — FAILS LOUDLY
   * instead of silently truncating: on a cycle the per-pair path counts
@@ -37,45 +37,32 @@ object Lineage {
   def ancestors(edges: DataFrame): DataFrame = {
     val e = edges.select(col("child"), col("parent"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val first = e.select(col("child").as("node"), col("parent").as("anc"),
-      lit(1L).as("depth"))
-    val out = walk(e, first)
-    e.unpersist()
-    out
+    try walk(e, e.select(col("child").as("node"), col("parent").as("anc"),
+      lit(1L).as("depth")))
+    finally e.unpersist()
   }
 
   /** Iterate `first` (node, anc, depth=1) against the persisted edge table
-    * to fixpoint. Each level is eagerly pinned, so the returned
-    * union no longer references `e` — callers may unpersist it before
-    * consuming the result. */
-  private def walk(e: DataFrame, first: DataFrame): DataFrame = {
-    var frontier = Checkpoints.pin(first)
-    val levels = scala.collection.mutable.ArrayBuffer(frontier)
-    var depth = 1
-    var done = false
-    while (depth < MaxDepth && !done) {
-      val next = Checkpoints.pin(frontier.alias("f")
+    * to fixpoint. Each level is eagerly pinned with its row count observed
+    * on that same action, so a round costs one job and the returned union
+    * no longer references `e` — callers may unpersist it before consuming
+    * the result.
+    *
+    * The cap is [[MaxDepth]] rounds: round k builds level k + 1, so a
+    * chain of exactly MaxDepth edges converges in the last allowed round
+    * (its level MaxDepth + 1 is empty), while a frontier still expandable
+    * there — a cycle or an over-deep graph — throws. */
+  private def walk(e: DataFrame, first: DataFrame): DataFrame =
+    Checkpoints.converge(List(Checkpoints.pin(first)), MaxDepth,
+      s"lineage walk still live at depth $MaxDepth — cycle in the edge " +
+        "table or a graph deeper than the supported bound; refusing to " +
+        "return a silently truncated result") { levels =>
+      val (next, n) = Checkpoints.pinObserved(levels.head.alias("f")
         .join(e.alias("e"), col("f.anc") === col("e.child"))
         .select(col("f.node"), col("e.parent").as("anc"),
-          (col("f.depth") + 1).as("depth")))
-      if (next.isEmpty) done = true
-      else { levels += next; frontier = next; depth += 1 }
-    }
-    if (!done) {
-      // the loop ended by the depth bound, not by an empty frontier — but
-      // nodes EXISTING at MaxDepth is legal (a chain of exactly that
-      // length); only an EXPANDABLE frontier there proves a cycle or an
-      // over-deep graph. One extra probe join distinguishes the two.
-      val probe = frontier.alias("f")
-        .join(e.alias("e"), col("f.anc") === col("e.child"))
-      if (!probe.isEmpty)
-        throw new IllegalStateException(
-          s"lineage walk still live at depth $MaxDepth — cycle in the edge " +
-            "table or a graph deeper than the supported bound; refusing to " +
-            "return a silently truncated result")
-    }
-    levels.reduce(_ union _)
-  }
+          (col("f.depth") + 1).as("depth")), count(lit(1)))
+      if (n.getLong(0) == 0L) (levels, true) else (next :: levels, false)
+    }.reverse.reduce(_ union _)
 
   /** For every node in the DAG, its root ancestor (one with no parent) and
     * the distance to it — J9's organism-root walk. */
@@ -102,8 +89,8 @@ object Lineage {
     val first = startKeys.alias("s")
       .join(down.alias("e"), col("s.node") === col("e.child"))
       .select(col("s.node"), col("e.parent").as("anc"), lit(1L).as("depth"))
-    val out = walk(down, first)
-    down.unpersist()
-    out.select(col("node").as("start"), col("anc").as("descendant"), col("depth"))
+    try walk(down, first)
+      .select(col("node").as("start"), col("anc").as("descendant"), col("depth"))
+    finally down.unpersist()
   }
 }

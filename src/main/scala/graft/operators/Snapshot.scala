@@ -1678,9 +1678,7 @@ object Snapshot {
     * metadata-sized: a group none of whose files were touched is
     * carried as its one-line entry, untouched. */
   private[graft] final case class ManifestGroup(entry: String,
-                                                lines: Seq[String]) {
-    def isRef: Boolean = entry.startsWith("@")
-  }
+                                                lines: Seq[String])
 
   /** One parsed manifest: header key→value plus the entry list. A
     * version manifest is TWO-LEVEL (the Iceberg manifest-list shape):

@@ -806,13 +806,27 @@ object SnapshotTxn {
   }
 
   /** The highest txn id known fully finalized (0 when none). Every txn
-    * at or below it needs no recovery scan. */
+    * at or below it needs no recovery scan.
+    *
+    * The marker is rewritten by delete-then-rename, so a read can land
+    * while it is absent. That reads as 0, which is always safe: callers
+    * treat it as "rescan from the start" or "do not advance". On a
+    * checksummed store the data file and its checksum file are renamed
+    * one after the other, so a read can also pair the data of one
+    * rewrite with the checksum of the next; that read is retried, and a
+    * mismatch that persists is real corruption and throws. */
   def recoveredThrough(spark: SparkSession, txnRoot: String): Int = {
     val rootFs = new Path(txnRoot).getFileSystem(
       spark.sessionState.newHadoopConf())
-    val p = new Path(s"$txnRoot/manifest/recovered")
-    if (!rootFs.exists(p)) 0
-    else Snapshot.readTextLines(rootFs, p.toString).head.trim.toInt
+    val p = s"$txnRoot/manifest/recovered"
+    def read(attempts: Int): Int =
+      try Snapshot.readTextLines(rootFs, p).head.trim.toInt
+      catch {
+        case _: java.io.FileNotFoundException => 0
+        case _: org.apache.hadoop.fs.ChecksumException if attempts > 1 =>
+          read(attempts - 1)
+      }
+    read(3)
   }
 
   private def advanceRecovered(spark: SparkSession,

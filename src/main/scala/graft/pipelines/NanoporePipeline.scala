@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import graft.sources.{Files, Parsers}
+import graft.sources.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,8 +30,4 @@ object NanoporePipeline {
       .groupBy(element_at(split(col("relpath"), "/"), 1).as("folder"))
       .agg(sort_array(collect_list(struct(col("relpath"), col("sha256")))).as("entries"),
         count(lit(1)).as("n_files"))
-
-  /** Convenience: read the run's manifest file (S9) and slice it. */
-  def manifestFor(spark: SparkSession, manifestPath: String, prefix: String): DataFrame =
-    manifestSlices(Parsers.readChecksumManifest(spark, manifestPath), prefix)
 }

@@ -15,14 +15,4 @@ object Jdbc {
   def readTable(spark: SparkSession, url: String, table: String,
                 props: java.util.Properties = new java.util.Properties): DataFrame =
     spark.read.jdbc(url, table, props)
-
-  /** Parallel read split on a numeric column: `numPartitions` concurrent
-    * connections, each scanning one stride of `[lower, upper]` — the
-    * shape a big path-info table needs (a single-connection read funnels
-    * the whole table through one task). */
-  def readTablePartitioned(spark: SparkSession, url: String, table: String,
-                           partitionColumn: String, lower: Long, upper: Long,
-                           numPartitions: Int,
-                           props: java.util.Properties = new java.util.Properties): DataFrame =
-    spark.read.jdbc(url, table, partitionColumn, lower, upper, numPartitions, props)
 }

@@ -9,7 +9,7 @@ import org.scalacheck.Gen
   * "c:<key>" / "p:<key>" id space into longs, with an exact decode.
   * Property-checked over random kinds and keys spanning 0..10^17-1 —
   * including the zero-extension prefix ties ("1" vs "10" vs "100") the
-  * +length term exists for. */
+  * +length term exists for — and the refusal of longer keys. */
 class LabelEncodeSpec extends SparkSpec {
 
   private val keyGen: Gen[Long] = Gen.oneOf(
@@ -43,6 +43,21 @@ class LabelEncodeSpec extends SparkSpec {
       assert((ea < eb) == (sa < sb) && (ea == eb) == (sa == sb),
         s"order($sa, $sb): enc=$ea/$eb")
     }
+  }
+
+  test("a key longer than 17 digits is refused, not truncated into a collision") {
+    // rpad would cut both keys to the same 17 digits and merge them
+    val df = spark.range(1).select(
+      lit(123456789012345678L).as("a"), lit(123456789012345679L).as("b"))
+    val e = intercept[Exception] {
+      df.select(Queries.lpEncode(col("a"), isPart = false),
+        Queries.lpEncode(col("b"), isPart = true)).collect()
+    }
+    assert(e.getMessage.contains("longer than 17 digits"), e.getMessage)
+    // 17 digits is still in range
+    val ok = spark.range(1)
+      .select(Queries.lpEncode(lit(99999999999999999L), isPart = false)).head()
+    assert(!ok.isNullAt(0))
   }
 
   test("labelPropagation over encoded longs decodes to the string-keyed result") {

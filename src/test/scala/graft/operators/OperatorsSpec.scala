@@ -265,6 +265,54 @@ class LineageSpec extends SparkSpec {
     assert(ex.getMessage.contains("cycle"))
   }
 
+  test("a refused walk releases its cached edge table") {
+    spark.catalog.clearCache()
+    val cyc = Seq(("x", "y"), ("y", "x")).toDF("child", "parent")
+    intercept[IllegalStateException] { Lineage.ancestors(cyc) }
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("every job of a walk is one of its pins") {
+    // the per-level row count rides the level's pin: a depth-2 walk runs
+    // no job outside the pins' actions. A pin's broadcast and adaptive
+    // shuffle stages run as jobs of their own from pool threads, so a job
+    // is attributed to its SQL action, and every action must be a pin
+    // (a job whose call site is Checkpoints.scala)
+    val sc = spark.sparkContext
+    val tag = s"lineage-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    @volatile var drained = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("graft.test.tag")).foreach {
+          case `tag` => jobs.add((e.properties.getProperty("spark.sql.execution.id"),
+            e.stageInfos.maxBy(_.stageId).name))
+          case t if t == tag + "-end" => drained = true
+          case _ =>
+        }
+    }
+    val chain = Seq(("c", "b"), ("b", "a")).toDF("child", "parent")
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.tag", tag)
+      Lineage.ancestors(chain)
+      // a marker job: events arrive in order, so once its start is seen
+      // every job of the walk has been delivered
+      sc.setLocalProperty("graft.test.tag", tag + "-end")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally {
+      sc.setLocalProperty("graft.test.tag", null)
+      sc.removeSparkListener(listener)
+    }
+    assert(drained)
+    val all = jobs.toArray.toSeq.map(_.asInstanceOf[(String, String)])
+    val pins = all.collect { case (x, site) if site.contains("Checkpoints.scala") => x }.toSet
+    assert(pins.size == 3, all) // level 1, level 2, and the empty level 3
+    assert(all.forall { case (x, _) => x != null && pins(x) }, all)
+  }
+
   test("a chain of exactly MaxDepth completes; one deeper fails loudly") {
     // depth == MaxDepth with nothing left to expand is a LEGAL input —
     // only an expandable frontier there may throw

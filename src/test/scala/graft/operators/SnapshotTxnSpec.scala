@@ -600,6 +600,29 @@ class SnapshotTxnSpec extends SparkSpec {
     ()
   }
 
+  test("recovered-through read racing a marker rewrite reads 0 or a written value, never throws") {
+    // the marker is rewritten by delete-then-rename: a read landing in
+    // between must see "no marker" (0), not a FileNotFoundException
+    val root = tmp("graft-txrr")
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
+      spark.sessionState.newHadoopConf())
+    val marker = s"$root/manifest/recovered"
+    val rounds = 400
+    Snapshot.writeFileAtomic(fs, marker, s"$root/manifest/.recovered_tmp", Seq("1"))
+    val writer = new Thread(() =>
+      (2 to rounds).foreach { k =>
+        Snapshot.writeFileAtomic(fs, marker, s"$root/manifest/.recovered_tmp",
+          Seq(k.toString))
+      })
+    writer.start()
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
+    while (writer.isAlive) seen += SnapshotTxn.recoveredThrough(spark, root)
+    writer.join()
+    seen += SnapshotTxn.recoveredThrough(spark, root)
+    assert(seen.forall(v => v >= 0 && v <= rounds), seen.distinct.sorted)
+    assert(seen.last == rounds)
+  }
+
   test("txnAsOfTime under NON-monotone manifest times: the running max never leaps a later txn") {
     // The r14 ADVICE scenario: CAS-retried renames / multi-writer clock
     // skew can stamp txn k+1's manifest EARLIER than txn k's. A
